@@ -5,9 +5,9 @@ Reference three-call protocol -> Spark mapping (SURVEY.md section 3):
 
 - ``build_job()``   : constructed the Dask delayed graph eagerly on the driver
                       (main.py:87-99).  Here it assembles one lazy DataFrame
-                      plan — tile generator -> feature scan -> label agg ->
-                      image scan -> 1:1 pairing — and returns it.  ``explain()``
-                      replaces ``dask.visualize``.
+                      plan — tile generator -> per-tile scan (features +
+                      image) -> per-row label — and returns it.
+                      ``explain()`` replaces ``dask.visualize``.
 - ``n_tiles()``     : len of the driver-side tile list (main.py:101-107).
                       Here: exact arithmetic, no scan, no driver list.
 - ``execute_job()`` : ``dask.compute`` gathering all results into client RAM
@@ -16,11 +16,14 @@ Reference three-call protocol -> Spark mapping (SURVEY.md section 3):
                       ``execute()`` with no path collects (small jobs only,
                       kept for reference parity).
 
-The label⋈image pairing (reference main.py:50-63) is an equi-join on the
-tile key.  Both sides derive from the same generated ``tiles`` frame, and
-labels aggregate *to* the tile key, so the join stays narrow/co-partitioned;
-at cluster scale AQE picks the strategy and either side can be broadcast
-when small.
+The label⋈image pairing (reference main.py:50-63) needs no join: one
+source scan (``sources/tile_scan.py``) fetches each tile's label features
+and its image in the same task and emits them as one row, and the label
+operators reduce that row's ``features`` array in place (``labels.py``,
+per-tile shape).  Like the reference's one Dask task per tile, each tile's
+fetch, label and image stay in one Spark task: the plan has no exchange,
+no join and no grouped map (segmentation adds a second ``mapInPandas``
+over the same rows).
 """
 
 from __future__ import annotations
@@ -31,8 +34,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from label_maker_dask_spark import labels as L
 from label_maker_dask_spark import tiles as T
-from label_maker_dask_spark.sources.imagery import fetch_images
-from label_maker_dask_spark.sources.vector_tiles import fetch_features
+from label_maker_dask_spark.sources.imagery import image_fetcher_factory
+from label_maker_dask_spark.sources.tile_scan import scan_tiles
+from label_maker_dask_spark.sources.vector_tiles import tile_fetcher_factory
 
 ML_TYPES = ("classification", "object-detection", "segmentation")
 
@@ -74,33 +78,27 @@ class LabelMakerJob:
     def tiles(self) -> DataFrame:
         return T.tiles_df(self.spark, self.bounds, self.zoom)
 
-    def features(self) -> DataFrame:
-        return fetch_features(
+    def scan(self) -> DataFrame:
+        """One row per tile: ``(z, x, y, features[, image])``."""
+        fetch_image = None
+        if self.imagery is not None or self.image_fetcher is not None:
+            fetch_image = image_fetcher_factory(self.imagery, self.image_fetcher)
+        return scan_tiles(
             self.tiles(),
-            label_source=self.label_source,
-            tile_fetcher=self.tile_fetcher,
-        )
-
-    def labels(self) -> DataFrame:
-        tiles, feats = self.tiles(), self.features()
-        if self.ml_type == "classification":
-            return L.classification_labels(feats, self.classes, tiles=tiles)
-        if self.ml_type == "object-detection":
-            return L.detection_labels(feats, self.classes, tiles=tiles)
-        return L.segmentation_labels(feats, self.classes, tiles=tiles)
-
-    def images(self) -> DataFrame:
-        return fetch_images(
-            self.tiles(), imagery=self.imagery, image_fetcher=self.image_fetcher
+            fetch_labels=tile_fetcher_factory(self.label_source, self.tile_fetcher),
+            fetch_image=fetch_image,
         )
 
     def build_job(self) -> DataFrame:
-        """Assemble the full lazy plan: labels ⋈ images on the tile key."""
-        plan = self.labels()
-        if self.imagery is not None or self.image_fetcher is not None:
-            plan = plan.join(self.images(), ["z", "x", "y"])
-        self.plan = plan
-        return plan
+        """Assemble the full lazy plan: the per-tile scan, labelled row by
+        row — ``(z, x, y, label[, image])``."""
+        label = {
+            "classification": L.classification_labels,
+            "object-detection": L.detection_labels,
+            "segmentation": L.segmentation_labels,
+        }[self.ml_type]
+        self.plan = label(self.scan(), self.classes)
+        return self.plan
 
     def explain(self, mode: str = "formatted") -> None:
         """Plan display — the analogue of ``dask.visualize`` (main.py:98-99)."""

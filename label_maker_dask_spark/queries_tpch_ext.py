@@ -297,7 +297,9 @@ def q21_suppliers_who_shipped_last(spark, sf_dir):
       earlier than ``max(d | supp != u)`` (a second window over the
       SAME partitioning — no new exchange); a null ship date always
       passes the anti-join (``d3 > NULL`` never matches), kept
-      explicitly for any-input parity with the join form.
+      explicitly for any-input parity with the join form, and so does
+      the unique last supplier's row when every other supplier's date is
+      null (``max(d | supp != u)`` is NULL: no later line exists).
 
     Proven row-identical to the join form at sf0.001/0.01/0.1 (exceptAll
     both ways = 0) and re-proven against the DuckDB oracle, which still
@@ -329,7 +331,13 @@ def q21_suppliers_who_shipped_last(spark, sf_dir):
         & (
             d.isNull()
             | (multi & (d == F.col("_m1")))
-            | (~multi & (s == F.col("_uhi")) & (F.col("_mo") <= d))
+            | (
+                ~multi
+                & (s == F.col("_uhi"))
+                # _mo is NULL when every other supplier's ship date is
+                # NULL: then no other line ships later, so the row passes
+                & F.coalesce(F.col("_mo") <= d, F.lit(True))
+            )
         )
     ).select("l_orderkey", "l_suppkey")
     orders = _t(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "F")

@@ -3,9 +3,11 @@
 The reference sniffs the imagery string *per task* (reference main.py:54 →
 utils.py:232-238, with ``is_tif`` doing a rasterio open probe each time,
 utils.py:209-224).  Here the sniff runs **once at plan time** on the driver
-and wires the matching reader into a single ``mapInPandas`` stage that
-returns ``(z, x, y, image binary)`` — raw bytes; decode is a separate,
-optional multimodal step (multimodal/images.py).
+and wires the matching reader into the per-tile source scan
+(``tile_scan.py``), which fetches each tile's image in the same task as its
+label features.  :func:`fetch_images` is the image-only view of that scan,
+``(z, x, y, image binary)`` — raw bytes; decode is a separate, optional
+multimodal step (multimodal/images.py).
 
 Readers require requests (TMS/WMS) or rio-tiler (COG); all optional — tests
 inject an ``image_fetcher`` (see ``fake.py``).
@@ -14,16 +16,12 @@ inject an ``image_fetcher`` (see ``fake.py``).
 from __future__ import annotations
 
 import os
-from typing import Callable, Iterator, Optional
+from typing import Callable, Optional
 from urllib.parse import parse_qs, urlparse
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
-IMAGES_SCHEMA = "z int, x long, y long, image binary"
-
-# image_fetcher: (z, x, y) -> bytes
-ImageFetcher = Callable[[int, int, int], bytes]
+from label_maker_dask_spark.sources.tile_scan import ImageFetcher, scan_tiles
 
 
 def sniff_imagery(imagery: str) -> str:
@@ -190,30 +188,27 @@ def cog_image_fetcher(imagery: str) -> ImageFetcher:
 _FETCHERS = {"tif": cog_image_fetcher, "wms": wms_image_fetcher, "tms": tms_image_fetcher}
 
 
+def image_fetcher_factory(
+    imagery: Optional[str] = None, image_fetcher: Optional[ImageFetcher] = None
+) -> Callable[[], ImageFetcher]:
+    """The per-partition fetcher factory :func:`tile_scan.scan_tiles`
+    takes: the injected ``image_fetcher`` when given, else the reader that
+    ``imagery`` sniffs to — sniffed here, once, at plan time."""
+    if image_fetcher is not None:
+        return lambda: image_fetcher
+    if imagery is None:
+        raise ValueError("provide imagery or image_fetcher")
+    kind = sniff_imagery(imagery)
+    return lambda: _FETCHERS[kind](imagery)
+
+
 def fetch_images(
     tiles: DataFrame,
     imagery: Optional[str] = None,
     image_fetcher: Optional[ImageFetcher] = None,
 ) -> DataFrame:
-    """Tiles ``(z, x, y)`` -> ``(z, x, y, image binary)`` via one
-    ``mapInPandas`` scan; connector chosen at plan time."""
-    if image_fetcher is None:
-        if imagery is None:
-            raise ValueError("provide imagery or image_fetcher")
-        kind = sniff_imagery(imagery)
-        factory = lambda: _FETCHERS[kind](imagery)  # noqa: E731
-    else:
-        factory = lambda: image_fetcher  # noqa: E731
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fetch = factory()
-        for pdf in batches:
-            images = [
-                fetch(int(z), int(x), int(y))
-                for z, x, y in zip(pdf["z"], pdf["x"], pdf["y"])
-            ]
-            out = pdf[["z", "x", "y"]].copy()
-            out["image"] = images
-            yield out
-
-    return tiles.mapInPandas(scan, schema=IMAGES_SCHEMA)
+    """Tiles ``(z, x, y)`` -> ``(z, x, y, image binary)``: the per-tile
+    scan with no label fetcher; connector chosen at plan time."""
+    return scan_tiles(
+        tiles, fetch_image=image_fetcher_factory(imagery, image_fetcher)
+    )

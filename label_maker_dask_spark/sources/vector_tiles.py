@@ -1,14 +1,18 @@
-"""Vector-tile label source: fetch + decode as a distributed scan.
+"""Vector-tile label source: fetch + decode of the label tiles.
 
 The reference does one HTTP GET + protobuf decode per Dask task
 (reference main.py:37-44), swallowing *any* exception into an empty tile
 (``except: tile_data = {}`` — the error-tolerant scan we must preserve).
 
-Here the fetch is a ``mapInPandas`` source stage: each Arrow batch of tile
-keys fans out to feature rows ``(z, x, y, id, geometry_type, geometry,
-properties)``.  Per-partition, the HTTP session is reused (the reference
-opens a fresh connection per tile).  At 1000 executors this is an
-embarrassingly parallel narrow stage; no shuffle, no driver involvement.
+Here the fetchers plug into the per-tile source scan (``tile_scan.py``):
+one ``mapInPandas`` pass emitting one row per tile with its decoded
+features as an array, which ``LabelMakerJob`` labels in place.
+:func:`fetch_features` is the exploded view of that same scan — one row
+per feature ``(z, x, y, id, geometry_type, geometry, properties)`` — for
+feature-table consumers (the catalog cells).  Per partition, the HTTP
+session is reused (the reference opens a fresh connection per tile).  At
+1000 executors this is an embarrassingly parallel narrow stage; no
+shuffle, no driver involvement.
 
 Decode requires ``mapbox_vector_tile`` and fetch requires ``requests`` —
 both optional here; tests inject a ``tile_fetcher`` (see ``fake.py``).
@@ -17,18 +21,12 @@ both optional here; tests inject a ``tile_fetcher`` (see ``fake.py``).
 from __future__ import annotations
 
 import json
-from typing import Callable, Iterator, List, Optional
+from typing import Callable, List, Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-FEATURES_SCHEMA = (
-    "z int, x long, y long, id long, geometry_type string, "
-    "geometry string, properties map<string,string>"
-)
-
-# tile_fetcher: (z, x, y) -> list of feature dicts
-TileFetcher = Callable[[int, int, int], List[dict]]
+from label_maker_dask_spark.sources.tile_scan import FEATURES, TileFetcher, scan_tiles
 
 
 def decoding_tile_fetcher(
@@ -87,35 +85,33 @@ def http_tile_fetcher(label_source: str, layer: str = "osm") -> TileFetcher:
     return decoding_tile_fetcher(get_bytes, layer)
 
 
+def tile_fetcher_factory(
+    label_source: Optional[str] = None, tile_fetcher: Optional[TileFetcher] = None
+) -> Callable[[], TileFetcher]:
+    """The per-partition fetcher factory :func:`tile_scan.scan_tiles`
+    takes: the injected ``tile_fetcher`` (hermetic) when given, else a live
+    HTTP fetcher for ``label_source``."""
+    if tile_fetcher is not None:
+        return lambda: tile_fetcher
+    if label_source is None:
+        raise ValueError("provide label_source or tile_fetcher")
+    return lambda: http_tile_fetcher(label_source)
+
+
 def fetch_features(
     tiles: DataFrame,
     label_source: Optional[str] = None,
     tile_fetcher: Optional[TileFetcher] = None,
-    batch_size: int = 64,
 ) -> DataFrame:
-    """Tiles ``(z, x, y)`` -> exploded feature rows via ``mapInPandas``.
+    """Tiles ``(z, x, y)`` -> exploded feature rows ``(z, x, y, id,
+    geometry_type, geometry, properties)``: the per-tile scan's
+    ``features`` array, one row per element.  Tiles with no features (or
+    a failed fetch) emit no rows.
 
     Exactly one of ``label_source`` (live HTTP) or ``tile_fetcher``
     (injected, hermetic) must be provided.
     """
-    if tile_fetcher is None:
-        if label_source is None:
-            raise ValueError("provide label_source or tile_fetcher")
-        fetcher_factory = lambda: http_tile_fetcher(label_source)  # noqa: E731
-    else:
-        fetcher_factory = lambda: tile_fetcher  # noqa: E731
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fetch = fetcher_factory()
-        for pdf in batches:
-            rows: list[dict] = []
-            for z, x, y in zip(pdf["z"], pdf["x"], pdf["y"]):
-                for f in fetch(int(z), int(x), int(y)):
-                    rows.append({"z": int(z), "x": int(x), "y": int(y), **f})
-                if len(rows) >= batch_size:
-                    yield pd.DataFrame(rows)
-                    rows = []
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return tiles.mapInPandas(scan, schema=FEATURES_SCHEMA)
+    per_tile = scan_tiles(
+        tiles, fetch_labels=tile_fetcher_factory(label_source, tile_fetcher)
+    )
+    return per_tile.select("z", "x", "y", F.inline(FEATURES))

@@ -37,6 +37,28 @@ def test_summary_is_small_complete_json_with_headline_keys():
     assert fs["worst_ratio"] >= fs["ratio"] - 1e-3
 
 
+def test_per_query_chunks_are_small_and_add_up_to_times():
+    """bench.py prints the per-query map as chunk lines just before the
+    compact line: each one must survive a tail capture of short lines,
+    and together they must carry exactly ``times``, in suite order."""
+    times = {
+        f"catalog_entry_with_a_long_descriptive_name_{i:03d}": 0.5 + i * 0.0137
+        for i in range(260)
+    }
+    lines = bench.per_query_chunks(times)
+    assert len(lines) > 1
+    merged = {}
+    for i, line in enumerate(lines):
+        assert len(line.encode()) < 2048
+        rec = json.loads(line)
+        assert rec["metric"] == "headline_suite_queries"
+        assert (rec["part"], rec["parts"]) == (i + 1, len(lines))
+        merged.update(rec["queries"])
+    assert merged == times
+    assert list(merged) == list(times)
+    assert bench.per_query_chunks({}) == []
+
+
 def test_summary_without_floor_queries_omits_floor_subset():
     s = bench.build_summary({"x": 1.0}, 0.01, 3, None)
     assert "floor_subset" not in s

@@ -503,6 +503,50 @@ def test_mvt_roundtrip_one_arrow_pass_one_shuffle(spark):
     assert n_exchanges <= 3, f"expected <=3 Exchange nodes, saw {n_exchanges}"
 
 
+def _executed_nodes(df) -> list[str]:
+    """Node names of ``df``'s executed physical plan, root first (read
+    after ``df``'s own action, so an adaptive plan shows its final form)."""
+    df.collect()
+    tree = df._jdf.queryExecution().executedPlan().toString()
+    return [
+        m.group(1)
+        for m in _re.finditer(r"^[\s:+\-]*(?:\*\s*\(\d+\)\s*)?(\w+)", tree, _re.M)
+    ]
+
+
+@pytest.mark.parametrize(
+    "ml_type", ["classification", "object-detection", "segmentation"]
+)
+def test_label_job_is_one_shuffle_free_per_tile_stage(spark, ml_type):
+    """LabelMakerJob plans tiles -> one per-tile source scan -> per-row
+    label: no exchange, no join, no grouped map.  The scan is the one
+    MapInPandas; segmentation's rasterize is a second one chained on it."""
+    from label_maker_dask_spark.job import LabelMakerJob
+    from label_maker_dask_spark.sources.fake import fake_features, fake_image_bytes
+
+    job = LabelMakerJob(
+        spark,
+        zoom=15,
+        bounds=[-9.179, 38.708, -9.16, 38.72],
+        classes=[
+            {"name": "Roads", "filter": ["has", "highway"]},
+            {"name": "Buildings", "filter": ["has", "building"], "buffer": 2.0},
+        ],
+        ml_type=ml_type,
+        tile_fetcher=fake_features,
+        image_fetcher=fake_image_bytes,
+    )
+    nodes = _executed_nodes(job.build_job())
+    assert not [n for n in nodes if "Exchange" in n or "ShuffleRead" in n], nodes
+    assert not [n for n in nodes if "Join" in n], nodes
+    assert "FlatMapGroupsInPandas" not in nodes, nodes
+    maps = [i for i, n in enumerate(nodes) if n == "MapInPandas"]
+    if ml_type == "segmentation":
+        assert len(maps) == 2 and maps[1] == maps[0] + 1, nodes
+    else:
+        assert len(maps) == 1, nodes
+
+
 def test_pq_join_form_never_broadcasts_query_subvectors(spark):
     """The PQ join twin's contract: the codebook sidecar may broadcast,
     but the corpus-sized query subvector frame must meet the candidate
